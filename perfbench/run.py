@@ -47,9 +47,7 @@ CODE_INDEX = dict(
 # ---- metrics ---------------------------------------------------------------------
 END_TO_END = {
     "setup_s": "s",
-    "query_p50_ms": "ms",
-    "op_p50_ms": "ms",
-    "throughput_per_s": "1/s",
+    "op_cpu_ms": "ms",
     "index_bytes_per_input_byte": "ratio",
 }
 # the search pool's classes (inputs.query_pool) and the ingest probe reads
@@ -70,7 +68,7 @@ PER_LAYER = {
         f"query.{c}.{m}": u
         for c in QUERY_CLASSES
         for m, u in (("p50_ms", "ms"), ("plan_ms", "ms"), ("exec_ms", "ms"),
-                     ("jobs", "count"), ("postings_per_hit", "ratio"))
+                     ("cpu_ms", "ms"), ("jobs", "count"), ("postings_per_hit", "ratio"))
     },
     "merge.upsert_s": "s",
     "tombstones.delete_s": "s",
@@ -87,6 +85,16 @@ def median(xs) -> float:
     return statistics.median(xs) if xs else 0.0
 
 
+def class_p50(qrecs: list[dict], key: str = "lat") -> float:
+    """Median of ``key`` (latency or CPU time, s) in each query class,
+    averaged over the classes. Smooth where a pooled median of a few classes
+    of unlike cost jumps from one class to the next."""
+    by_cls: dict[str, list[float]] = {}
+    for r in qrecs:
+        by_cls.setdefault(r["cls"], []).append(r[key])
+    return statistics.mean(median(v) for v in by_cls.values()) if by_cls else 0.0
+
+
 def quantile(xs, q: float) -> float:
     """Nearest-rank quantile."""
     s = sorted(xs)
@@ -101,6 +109,35 @@ def du(path: str) -> int:
         for f in fs
         if not f.endswith(".crc")
     )
+
+
+_TICK = os.sysconf("SC_CLK_TCK")
+
+
+def tree_cpu_s() -> float:
+    """CPU seconds (user + system) used so far by this process and every
+    descendant: the JVM, the Python workers, and the children they reaped.
+    The kernel charges time the hypervisor steals to ``steal``, not to a
+    process, so this stays steady when the host is contended."""
+    kids: dict[int, list[int]] = {}
+    ticks: dict[int, int] = {}
+    for d in os.listdir("/proc"):
+        if not d.isdigit():
+            continue
+        try:
+            with open(f"/proc/{d}/stat") as f:
+                stat = f.read()
+        except OSError:  # the process ended while listed
+            continue
+        fields = stat[stat.rindex(")") + 2 :].split()
+        kids.setdefault(int(fields[1]), []).append(int(d))
+        ticks[int(d)] = sum(int(x) for x in fields[11:15])  # utime stime cutime cstime
+    total, todo = 0, [os.getpid()]
+    while todo:
+        pid = todo.pop()
+        total += ticks.get(pid, 0)
+        todo += kids.get(pid, [])
+    return total / _TICK
 
 
 def host_sample() -> dict:
@@ -143,8 +180,12 @@ class Bench:
                 "spark.ui.showConsoleProgress": "false",
                 "spark.local.dir": os.path.join(self.work, "spark-local"),
                 "spark.sql.warehouse.dir": os.path.join(self.work, "warehouse"),
-                # no hsperfdata file: the JVM would write it under /tmp
-                "spark.driver.extraJavaOptions": f"-Djava.io.tmpdir={self.work}/tmp -XX:-UsePerfData",
+                # no hsperfdata file: the JVM would write it under /tmp.
+                # C1 only: a run is too short for C2 to settle, and its
+                # compile threads would compete with the timed work (NOTES.md)
+                "spark.driver.extraJavaOptions": (
+                    f"-Djava.io.tmpdir={self.work}/tmp -XX:-UsePerfData -XX:TieredStopAtLevel=1"
+                ),
             },
         )
         self.spark.sparkContext.setLogLevel("ERROR")
@@ -161,6 +202,7 @@ class Bench:
         self.setup_s = self.build_s = 0.0
         self.window_s = 0.0
         self.ops: list[float] = []  # latencies of the workload's timed ops (s)
+        self.op_cpu: list[float] = []  # their CPU time (s), where not a query
         self.qrecs: list[dict] = []  # timed query records
         self.metrics: dict[str, tuple[float, str]] = {}
         self.human: dict[str, tuple[float, str]] = {}
@@ -229,6 +271,7 @@ class Bench:
         if self.tracer is not None:
             self.tracer.request = request
             sc.setJobGroup(request, cls)
+        c0 = tree_cpu_s()
         t0 = time.perf_counter()
         with self.span(f"bench.query.{cls}"):
             with self.span("bench.plan"):
@@ -247,7 +290,8 @@ class Bench:
             with self.span("bench.exec"):
                 rows = df.collect()
         t2 = time.perf_counter()
-        rec = {"cls": cls, "q": q, "lat": t2 - t0, "plan": t1 - t0, "exec": t2 - t1, "hits": len(rows)}
+        rec = {"cls": cls, "q": q, "lat": t2 - t0, "plan": t1 - t0, "exec": t2 - t1,
+               "cpu": tree_cpu_s() - c0, "hits": len(rows)}
         if self.tracer is not None:
             from es_indexer_spark.index import catalog
 
@@ -372,10 +416,12 @@ def run_search(b: Bench) -> str:
         b.oracle_checked += len(checks)
 
     b.metric("setup_s", b.setup_s)
-    b.metric("query_p50_ms", median(b.ops) * 1e3)
-    b.metric("op_p50_ms", median(b.ops) * 1e3)
-    b.metric("throughput_per_s", n_queries / b.window_s)
+    b.metric("op_cpu_ms", class_p50(b.qrecs, "cpu") * 1e3)  # every op is a query
     b.metric("index_bytes_per_input_byte", du(vdir) / float(pdf["content"].str.len().sum()))
+    b.human.update({
+        "op_p50_ms": (class_p50(b.qrecs) * 1e3, "ms"),
+        "throughput_per_s": (n_queries / b.window_s, "1/s"),
+    })
     percentiles(b, "query", b.ops)
     b.human.update({
         "corpus_files": (n_files, "count"),
@@ -445,17 +491,18 @@ def run_ingest(b: Bench) -> str:
     first = [first[i] for i in rng.choice(len(first), n_up, replace=False)]
     state = {"docid": snapshot()[2], "prev": first, "docs": 0, "bytes": 0}
     pool = inputs.query_pool(b.seed, inputs.tokens(base))
-    fixed_reads = [pool["stop"][0], pool["multi"][0]]
+    # read after every publish: distinct top-k queries of the seed's pool
+    fixed_reads = list(dict.fromkeys([pool["rare"][0], pool["multi"][0], *pool["stop"]]))
     checks = []  # (label, phys, dead, query, k, got, must_see, must_not_see)
 
-    def probe(label: str, markers: str, ups: list, gone: set) -> None:
+    def probe(label: str, markers: str, ups: list, gone: set, reads: list) -> None:
         """Read the new version: the markers (k=2*n_up: every doc carrying
         them, which must hold the step's upserts ``ups`` and none of its
-        deleted docids ``gone``), then two fixed queries. Each is the first
-        read of its terms on that version."""
+        deleted docids ``gone``), then ``reads``. Each is the first read of
+        its terms on that version."""
         phys, dead, state["docid"] = snapshot()
         must = {state["docid"][k] for k in ups}
-        for i, q in enumerate([markers, *fixed_reads]):
+        for i, q in enumerate([markers, *reads]):
             k = 2 * n_up if i == 0 else TOPK
             b.attempted += 1
             try:
@@ -482,18 +529,20 @@ def run_ingest(b: Bench) -> str:
         del_ids = [state["docid"][k] for k in gone]
         if b.tracer is not None:
             b.tracer.request = f"step{s}"
+        c0 = tree_cpu_s()
         t0 = time.perf_counter()
         with b.span("bench.ingest_step", step=s):
             index_batch(batch, s)
             delete_docs(b.spark, root, del_ids)
         dt = time.perf_counter() - t0
+        b.op_cpu.append(tree_cpu_s() - c0)
         for r in rows:
             live[(r.repo, r.path)] = r
             by_sha[inputs.sha256(r.content)] = (r.lang, r.content)
             state["bytes"] += len(r.content)
         for k in gone:
             del live[k]
-        probe(f"probe step {s}", f"{mk} {mk_prev}", ups, set(del_ids))
+        probe(f"probe step {s}", f"{mk} {mk_prev}", ups, set(del_ids), fixed_reads)
         state["prev"] = ups
         state["docs"] += len(rows) + len(gone)
         return dt
@@ -534,35 +583,37 @@ def run_ingest(b: Bench) -> str:
         if snapshot()[1]:
             raise AssertionError("dead copies survive compaction")
         probe("probe after compaction", f"{inputs.marker(b.seed, s - 1)} {inputs.marker(b.seed, s - 2)}",
-              [], set())
+              [], set(), [])
     except Exception as e:
         b.fail(1, f"compaction: {type(e).__name__}: {e}")
     b.window_s = time.perf_counter() - t_start
     bytes_written = du(root) - bytes0
 
     b.set_phase("check")
+    corpora = {}  # one oracle per probed version
     for label, phys, dead, q, k, got, must, gone in checks:
         ids = {d for d, _ in got}
         if not must <= ids:
             b.fail(1, f"{label}: {len(must - ids)} of the step's upserts not visible")
         if ids & gone:
             b.fail(1, f"{label}: {len(ids & gone)} deleted docs still visible")
-        msg = oracle.compare(got, oracle.Corpus(phys, dead).topk(q, k))
+        if id(phys) not in corpora:
+            corpora[id(phys)] = oracle.Corpus(phys, dead)
+        msg = oracle.compare(got, corpora[id(phys)].topk(q, k))
         if msg:
             b.fail(1, f"{label}: {msg}")
         b.oracle_checked += 1
 
-    probes = [r["lat"] for r in b.qrecs]
     live_bytes = float(sum(len(r.content) for r in live.values()))
     b.metric("setup_s", b.setup_s)
-    b.metric("query_p50_ms", median(probes) * 1e3)
-    b.metric("op_p50_ms", median(b.ops) * 1e3)
-    b.metric("throughput_per_s", state["docs"] / (sum(b.ops) + compact_s))
+    b.metric("op_cpu_ms", median(b.op_cpu) * 1e3)
     b.metric("index_bytes_per_input_byte", du(cvdir) / live_bytes)
     b.human.update({
-        "ingest_docs_per_s": b.metrics["throughput_per_s"],
+        "op_p50_ms": (median(b.ops) * 1e3, "ms"),
+        "ingest_docs_per_s": (state["docs"] / (sum(b.ops) + compact_s), "1/s"),
         "ingest_step_p50_s": (median(b.ops), "s"),
-        "ingest_query_p50_ms": b.metrics["query_p50_ms"],
+        "ingest_query_p50_ms": (class_p50(b.qrecs) * 1e3, "ms"),  # one class: fresh
+        "ingest_query_cpu_ms": (class_p50(b.qrecs, "cpu") * 1e3, "ms"),
         "ingest_steps": (len(b.ops), "count"),
         "compact_s": (compact_s, "s"),
         "live_docs": (len(live), "count"),
@@ -629,6 +680,7 @@ def per_layer(b: Bench, build_phase: str) -> dict[str, tuple[float, str]]:
         L[f"query.{c}.p50_ms"] = median([r["lat"] for r in rs]) * 1e3
         L[f"query.{c}.plan_ms"] = median([r["plan"] for r in rs]) * 1e3
         L[f"query.{c}.exec_ms"] = median([r["exec"] for r in rs]) * 1e3
+        L[f"query.{c}.cpu_ms"] = median([r["cpu"] for r in rs]) * 1e3
         L[f"query.{c}.jobs"] = median([r["jobs"] for r in rs])
         L[f"query.{c}.postings_per_hit"] = median([
             sum(sum_df(r["vdir"], t) for t in (r["q"].values() if isinstance(r["q"], dict) else [r["q"]]))
@@ -644,7 +696,7 @@ def per_layer(b: Bench, build_phase: str) -> dict[str, tuple[float, str]]:
     L["catalog.versions_published"] = sum(
         1 for s in spans if s["name"] == "index.catalog.publish" and s["phase"] == build_phase
     )
-    L["trace.op_p50_ms"] = median(b.ops) * 1e3
+    L["trace.op_p50_ms"] = b.human["op_p50_ms"][0]
     L["trace.hook_pct"] = 100.0 * b.tracer.hook_s / max(1e-9, b.window_s)
     return {k: (float(v), PER_LAYER[k]) for k, v in L.items()}
 
