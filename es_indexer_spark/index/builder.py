@@ -46,7 +46,7 @@ from typing import Iterable, Iterator, Sequence
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, Window, functions as F
 
 from es_indexer_spark.analysis.tokenizer import get_term_stats_udf
 from es_indexer_spark.index import catalog
@@ -109,24 +109,25 @@ def _range_pid_expr(
 
 def assign_docids(df: DataFrame, order_cols: Sequence[str], num_partitions: int | None = None) -> DataFrame:
     """Deterministic dense global docid = row_number over ORDER BY
-    ``order_cols``, without a single-partition window (SURVEY.md §2.5):
-    range-bucket on the order key, sort within buckets, add per-bucket
-    cumulative offsets.
+    ``order_cols`` (nulls first), without a single-partition window
+    (SURVEY.md §2.5): range-bucket on the order key, number rows within each
+    bucket, add per-bucket cumulative offsets.
 
-    Round-4 redesign — why not ``repartitionByRange`` + physical partition
-    ids: the offsets pass and the stamping pass are separate Spark jobs, and
-    repartitionByRange's row→partition map is NOT a pure data function
-    (boundaries are re-SAMPLED per execution; AQE re-coalesces), so the two
-    jobs could disagree — observed as ~2.7% duplicate docids at 200k rows.
-    Pinning with an eager localCheckpoint fixed correctness but materialized
-    the whole corpus in executor storage (measured 2–3× slower at the
-    1M-file leg). Here the range boundaries are computed ONCE on the driver
-    from a deterministic hash-sample of the keys (no RNG, no physical-plan
-    dependence) and the bucket id is a pure column expression
-    (:func:`_range_pid_expr`) — both jobs agree by construction, docids stay
-    GLOBALLY key-ordered (posting locality: related files share terms, and
-    key-adjacent docids give small delta-gaps and few shard crossings), and
-    nothing is checkpointed.
+    Why not ``repartitionByRange`` + physical partition ids: the offsets pass
+    and the stamping pass are separate Spark jobs, and repartitionByRange's
+    row→partition map is NOT a pure data function (boundaries are re-SAMPLED
+    per execution; AQE re-coalesces), so the two jobs could disagree —
+    observed as ~2.7% duplicate docids at 200k rows. Here the range
+    boundaries are computed ONCE on the driver from a deterministic
+    hash-sample of the keys and the bucket id ``__pid`` is a pure column
+    expression (:func:`_range_pid_expr`) — both jobs agree by construction,
+    and docids stay GLOBALLY key-ordered (posting locality: key-adjacent
+    docids give small delta-gaps and few shard crossings).
+
+    Stamping is JVM-only: ``docid = offset[__pid] + row_number() OVER
+    (PARTITION BY __pid ORDER BY order_cols) - 1``. The range exchange on
+    ``__pid`` (~one bucket per task) already clusters the window, so it adds
+    a sort but no second exchange, and no column reaches a Python worker.
 
     Determinism: docids are a pure function of the input rows — stable
     across runs/resumes AND across independent calls (the test-oracle
@@ -136,9 +137,6 @@ def assign_docids(df: DataFrame, order_cols: Sequence[str], num_partitions: int 
     key_cols = [F.col(c) for c in order_cols]
     n = df.count()
     if n == 0:
-        out_schema = ", ".join(
-            f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema.fields
-        ) + ", docid long"
         return df.withColumn("docid", F.lit(None).cast("long"))
     # deterministic key sample (~64 keys per target bucket): rows whose key
     # hash lands in a fixed residue class — no RNG, column-pruned scan
@@ -156,53 +154,45 @@ def assign_docids(df: DataFrame, order_cols: Sequence[str], num_partitions: int 
     else:
         boundaries = []  # tiny input: one bucket
     tagged = df.withColumn("__pid", _range_pid_expr(order_cols, boundaries))
-    counts = {
-        r["__pid"]: r["cnt"]
-        for r in tagged.groupBy("__pid").agg(F.count("*").alias("cnt")).collect()
-    }
-    offsets = {}
-    acc = 0
-    for pid in sorted(counts):
-        offsets[pid] = acc
-        acc += counts[pid]
-
-    # PLACEMENT ONLY (correctness never depends on it — offsets key on the
-    # __pid COLUMN): range-place the bucket ids so each task gets ~one bucket.
-    # Hash placement collides ~parts distinct ids into parts partitions
-    # (balls-in-bins max ~3 buckets on one task = a 2-3x stamping straggler,
-    # measured at local[8]/480k).
-    ordered = tagged.repartitionByRange(parts, "__pid").sortWithinPartitions(
-        "__pid", *order_cols
+    counts = dict(tagged.groupBy("__pid").count().collect())
+    offsets = np.cumsum([0] + [counts.get(p, 0) for p in range(len(boundaries))])
+    offset = F.array(*[F.lit(int(o)) for o in offsets])[F.col("__pid")]
+    rank = F.row_number().over(
+        Window.partitionBy("__pid").orderBy(*[F.col(c).asc_nulls_first() for c in order_cols])
     )
-    out_schema = ", ".join(
-        f"`{f.name}` {f.dataType.simpleString()}" for f in ordered.schema.fields if f.name != "__pid"
-    ) + ", docid long"
+    return (
+        tagged.repartitionByRange(parts, "__pid")
+        .withColumn("docid", (offset + rank - 1).cast("long"))
+        .drop("__pid")
+    )
 
-    def add_ids(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # a bucket lives wholly inside one task partition (range shuffle on
-        # __pid — repartitionByRange; AQE coalescing merges whole shuffle
-        # partitions, never splits one), arrives key-sorted, and may span
-        # Arrow batches — per-bucket running counters carry the local rank
-        # across batches
-        local: dict[int, int] = {}
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            pids = pdf["__pid"].to_numpy()
-            docids = np.empty(len(pdf), dtype=np.int64)
-            change = np.nonzero(np.diff(pids))[0] + 1
-            starts = np.concatenate(([0], change))
-            ends = np.concatenate((change, [len(pdf)]))
-            for s, e in zip(starts, ends):
-                p = int(pids[s])
-                base = offsets[p] + local.get(p, 0)
-                docids[s:e] = np.arange(base, base + (e - s), dtype=np.int64)
-                local[p] = local.get(p, 0) + (e - s)
-            pdf = pdf.drop(columns="__pid")
-            pdf["docid"] = docids
-            yield pdf
 
-    return ordered.mapInPandas(add_ids, schema=out_schema)
+def docs_base(
+    src: DataFrame, *, content_col: str, id_col: str | None, order_cols: Sequence[str],
+    meta_cols: Sequence[str], tokenizer: str, lang_col: str | None, store_positions: bool,
+) -> DataFrame:
+    """The docs stage's input (docid, sha256, tstats, meta..., doc_len): docids
+    first, tokenize after. Term stats (tf + positions) come from the tokenizer
+    UDF, per doc, map-side: the posting-list (term, docid, tf) relation needs
+    NO groupBy/shuffle — at 100 TB that removes a full-corpus shuffle of every
+    token. Content is projected away: a persisted base holds term stats +
+    sha256 + metadata, never the corpus text (the dominant column)."""
+    ts_udf = get_term_stats_udf(tokenizer, store_positions)
+    if tokenizer == "code":
+        lang = F.col(lang_col) if lang_col else F.lit("")
+        tstats = ts_udf(F.col(content_col), lang)
+    else:
+        tstats = ts_udf(F.col(content_col))
+    if id_col is not None:
+        with_ids = src.withColumn("docid", F.col(id_col).cast("long"))
+    else:
+        with_ids = assign_docids(src, list(order_cols))
+    return with_ids.select(
+        "docid",
+        F.sha2(F.col(content_col), 256).alias("sha256"),
+        tstats.alias("tstats"),
+        *[c for c in meta_cols if c != "docid"],
+    ).withColumn("doc_len", F.col("tstats.doc_len").cast("long"))
 
 
 def _make_encoder(
@@ -492,31 +482,12 @@ def _build_index_inner(
     vdir = os.path.join(out_root, version)
     os.makedirs(vdir, exist_ok=True)
 
-    # Term stats (tf + positions) are computed INSIDE the tokenizer UDF, per doc,
-    # map-side: the posting-list (term, docid, tf) relation then needs NO
-    # groupBy/shuffle at all — at 100 TB that removes a full-corpus shuffle of
-    # every token occurrence (the single biggest data movement of the build).
-    ts_udf = get_term_stats_udf(tokenizer, store_positions)
-    if tokenizer == "code":
-        lang = F.col(lang_col) if lang_col else F.lit("")
-        tstats = ts_udf(F.col(content_col), lang)
-    else:
-        tstats = ts_udf(F.col(content_col))
-
-    # docids first (cheap columns only through the range shuffle), tokenize after;
-    # persist so docs + raw stages tokenize once.
-    if id_col is not None:
-        with_ids = src.withColumn("docid", F.col(id_col).cast("long"))
-    else:
-        with_ids = assign_docids(src, list(order_cols))
-    # project content away BEFORE the persist: the cache holds term stats +
-    # sha256 + metadata, never the corpus text itself (the dominant column)
-    base = with_ids.select(
-        "docid",
-        F.sha2(F.col(content_col), 256).alias("sha256"),
-        tstats.alias("tstats"),
-        *[c for c in meta_cols if c != "docid"],
-    ).withColumn("doc_len", F.col("tstats.doc_len").cast("long")).persist()
+    # persist so the docs and postings stages tokenize once
+    base = docs_base(
+        src, content_col=content_col, id_col=id_col, order_cols=order_cols,
+        meta_cols=meta_cols, tokenizer=tokenizer, lang_col=lang_col,
+        store_positions=store_positions,
+    ).persist()
 
     # ---- stage: docs (docid, doc_len, sha256 invariant, metadata) ----------------
     docs_path = os.path.join(vdir, "docs")
@@ -783,9 +754,16 @@ def _build_index_inner(
             pass  # non-local fs: keep the session default
     postings_path = os.path.join(vdir, "postings")
     encoder = _make_encoder(block_size, shard_size, avgdl, k1, b, store_positions)
-    batch_parts = max(
-        spark.sparkContext.defaultParallelism * 2,
-        n_raw_parts // max(1, n_ckpt_batches),
+    # Encode tasks per batch: 2x cores (or one per raw slice), capped by the
+    # data at ~postings_per_slice tokens per task but never below one task per
+    # core. Each task pays a fixed Python-worker start (~0.25 s of CPU on a
+    # 4-vCPU host): at local[4] a 200-doc delta's 16k postings take 4 tasks,
+    # not 16, while a batch of >= uncapped count x postings_per_slice tokens
+    # keeps the uncapped count.
+    par = spark.sparkContext.defaultParallelism
+    batch_parts = min(
+        max(par * 2, n_raw_parts // max(1, n_ckpt_batches)),
+        max(par, -(-docs_meta["sum_doc_len"] // (n_ckpt_batches * postings_per_slice))),
     )
     for batch in range(n_ckpt_batches):
         stage = f"postings_batch_{batch}"

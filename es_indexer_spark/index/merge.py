@@ -31,6 +31,7 @@ from __future__ import annotations
 
 import os
 import time
+from typing import Sequence
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -187,9 +188,7 @@ def merge_indexes(
     # copy disappears and its replacement appears in ONE CURRENT swap
     upserted = 0
     if tombstone_docids is not None:
-        upserted = tombstone_docids.count()
-        if upserted:
-            _tombstones.append_to_vdir(spark, vdir, tombstone_docids)
+        upserted = _tombstones.append_nonempty(spark, vdir, tombstone_docids)
 
     catalog.write_stats(
         vdir,

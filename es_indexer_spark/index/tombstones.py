@@ -90,9 +90,10 @@ def append_to_vdir(
     if isinstance(docids, DataFrame):
         df = docids.select(F.col("docid").cast("long"))
     else:
-        df = spark.createDataFrame(
-            [(int(d),) for d in docids], "docid long"
-        ).coalesce(1)
+        # Arrow-backed local relation: the ids reach the JVM as Arrow data, so
+        # the write runs no Python worker (a Python-list RDD would)
+        ids = pd.DataFrame({"docid": np.asarray(docids, dtype=np.int64)})
+        df = spark.createDataFrame(ids, "docid long").coalesce(1)
     df.write.mode("append").parquet(_tomb_dir(vdir))
 
 
@@ -157,18 +158,9 @@ def delete_by_query(
         raise ValueError(
             "pass field/value, must/filter_phrase, or match_all=True"
         )
-    # persist so the (expensive) match query runs ONCE — the count and the
-    # tombstone write below share the materialized hit set
-    hits = hits.persist()
-    try:
-        n = hits.count()
-        if n:
-            # the per-process tombstone-array cache is keyed by the
-            # tombstone-file listing, so the append invalidates it
-            delete_docs(spark, index_root, hits)
-    finally:
-        hits.unpersist()
-    return n
+    # the (expensive) match query runs ONCE; the per-process tombstone-array
+    # cache is keyed by the tombstone-file listing, so the append invalidates it
+    return append_nonempty(spark, vdir, hits)
 
 
 def tombstone_df(spark: SparkSession, vdir: str) -> DataFrame | None:
@@ -280,14 +272,27 @@ def carry(
     through a metadata-speed merge.  Returns the number of carried docids."""
     if not _listing(src_vdir):
         return 0
-    df = (
+    return append_nonempty(
+        spark,
+        dst_vdir,
         spark.read.parquet(_tomb_dir(src_vdir))
         .select((F.col("docid") + docid_offset).alias("docid"))
-        .distinct()
+        .distinct(),
     )
-    n = df.count()
-    if n:
-        df.write.mode("append").parquet(_tomb_dir(dst_vdir))
+
+
+def append_nonempty(spark: SparkSession, vdir: str, docids: DataFrame) -> int:
+    """Append a ``docid`` DataFrame's rows as tombstones under ``vdir`` and
+    return their count, evaluating the frame once (persisted for the count
+    and the write). Nothing matched → no file: an empty tombstone file would
+    make every later query on the version list and count tombstones."""
+    docids = docids.persist()
+    try:
+        n = docids.count()
+        if n:
+            append_to_vdir(spark, vdir, docids)
+    finally:
+        docids.unpersist()
     return n
 
 

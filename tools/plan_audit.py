@@ -1037,6 +1037,33 @@ def main() -> int:
         ],
     ))
 
+    # 39. build docs stage: docids stamped by a row_number window on the
+    # range-bucketed order key (no second exchange); the tokenizer is the
+    # stage's only Python
+    from es_indexer_spark.index.builder import docs_base
+
+    p = formatted(docs_base(
+        spark.read.parquet(os.path.join(sf_dir, "documents.parquet")),
+        content_col="text", id_col=None, order_cols=("doc_id",),
+        meta_cols=("lang",), tokenizer="standard", lang_col=None,
+        store_positions=False,
+    ))
+    python_nodes = re.findall(
+        r"^\(\d+\) (MapInPandas|ArrowEvalPython|BatchEvalPython)", p, re.M
+    )
+    sections.append((
+        "build docs stage: JVM docid window, tokenizer the only Python",
+        p,
+        [
+            ("one exchange, a range partitioning on the bucket id",
+             len(re.findall(r"^\(\d+\) Exchange", p, re.M)) == 1
+             and "rangepartitioning(__pid" in p),
+            ("docids from a row_number window", "Window" in p and "row_number()" in p),
+            ("exactly one Python node (the tokenizer UDF)",
+             len(python_nodes) == 1 and "standard_stats" in p),
+        ],
+    ))
+
     failures = 0
     lines = [
         "# PLANS — physical-plan audit evidence",
